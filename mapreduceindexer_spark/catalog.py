@@ -258,14 +258,14 @@ def q_index_lines(spark, sf_dir):
 )
 def q_postings_merge(spark, sf_dir):
     """Incremental index maintenance: postings built separately over two
-    disjoint document halves, then merged (operators/index.merge_postings)
-    — must equal the full rebuild, which is exactly what the oracle runs.
+    disjoint document halves, then merged
+    (operators/index.merge_postings_colocated) — must equal the full rebuild, which is exactly what the oracle runs.
     Array serialized to a string for the pandas canonicalizer (see
     q_postings)."""
     docs = _docs(spark, sf_dir)
     base = ix.build_postings(docs.filter(F.col("doc_id") % 2 == 0), salt_buckets=16)
     delta = ix.build_postings(docs.filter(F.col("doc_id") % 2 == 1), salt_buckets=16)
-    return ix.merge_postings(base, delta).select(
+    return ix.merge_postings_colocated(base, delta).select(
         "term",
         "letter",
         F.concat_ws(" ", "doc_ids").alias("doc_ids"),
@@ -323,8 +323,9 @@ def q_index_cdc(spark, sf_dir):
     """CDC-driven index maintenance — one round of upstream change
     capture applied to a maintained postings state: the batch DELETES
     some existing documents (downdate, operators/index.
-    delete_from_postings) and INSERTS new ones (merge, merge_postings),
-    composed as merge(delete(base, gone), build(added)). The oracle is
+    delete_from_postings) and INSERTS new ones (merge,
+    merge_postings_colocated), composed as
+    merge(delete(base, gone), build(added)). The oracle is
     the full rebuild over the final document set — the maintained index
     must be indistinguishable from a from-scratch build, which is the
     invariant that lets a 100 TB index absorb upstream churn without
@@ -342,7 +343,7 @@ def q_index_cdc(spark, sf_dir):
     added = ix.build_postings(
         docs.filter(F.col("doc_id") % 2 == 1), salt_buckets=16
     )
-    return ix.merge_postings(
+    return ix.merge_postings_colocated(
         ix.delete_from_postings(base, gone), added
     ).select(
         "term",

@@ -25,15 +25,12 @@ Scale design (100 TB):
   needed), plus one optional exchange for letter-partitioned output and
   one more when ``salt_buckets`` splits the aggregation in two levels.
 - **Stopword skew**: a term appearing in ~every document produces a posting
-  list the size of the corpus, all routed to one reduce task. Two built-in
-  mitigations, both semantics-preserving:
-  * ``salt_buckets=N`` — two-level aggregation: partial posting sets per
-    (term, salt) land on N different tasks, then N pre-aggregated arrays
-    (not millions of rows) merge per term. Cuts final-stage shuffle record
-    count by ~|docs per term| / N and lets AQE balance the first stage.
-  * ``segment_size=N`` — cap posting rows at N doc IDs with a ``segment``
-    ordinal, so no single row/task ever materializes an unbounded array.
-    Downstream consumers re-assemble or stream segments.
+  list the size of the corpus, all routed to one reduce task.
+  ``salt_buckets=N`` is the semantics-preserving mitigation — two-level
+  aggregation: partial posting sets per (term, salt) land on N different
+  tasks, then N pre-aggregated arrays (not millions of rows) merge per
+  term. Cuts final-stage shuffle record count by ~|docs per term| / N and
+  lets AQE balance the first stage.
 """
 
 from __future__ import annotations
@@ -60,17 +57,23 @@ def salted_partials(pairs: DataFrame, salt_buckets: int) -> DataFrame:
     ).agg(F.collect_set("doc_id").alias("_partial"))
 
 
-def build_postings(
-    docs: DataFrame,
-    *,
-    salt_buckets: int | None = None,
-    segment_size: int | None = None,
-) -> DataFrame:
+def _postings_rows(term_ids: DataFrame) -> DataFrame:
+    """(term, doc_ids) → the postings row format (term, letter, doc_ids,
+    df): letter is the term's first character, df the posting size."""
+    return term_ids.select(
+        "term",
+        F.substring("term", 1, 1).alias("letter"),
+        "doc_ids",
+        F.size("doc_ids").cast("bigint").alias("df"),
+    )
+
+
+def build_postings(docs: DataFrame, *, salt_buckets: int | None = None) -> DataFrame:
     """documents → postings(term, letter, doc_ids ASC, df).
 
-    ``salt_buckets``/``segment_size``: skew mitigations, see module
-    docstring. Output values are identical for every setting — verified by
-    tests — so callers pick purely on scale grounds.
+    ``salt_buckets``: skew mitigation, see module docstring. Output values
+    are identical with and without it — verified by tests — so callers
+    pick purely on scale grounds.
     """
     # No pre-distinct: collect_set dedups (term, doc_id) inside the
     # aggregation, and duplicates of a pair hash to the same salt bucket,
@@ -88,28 +91,12 @@ def build_postings(
         merged = pairs.groupBy("term").agg(
             F.sort_array(F.collect_set("doc_id")).alias("doc_ids")
         )
-    postings = merged.select(
-        "term",
-        F.substring("term", 1, 1).alias("letter"),
-        "doc_ids",
-        F.size("doc_ids").cast("bigint").alias("df"),
-    )
-    if segment_size:
-        # Segment long posting lists: one row per segment_size doc IDs.
-        n_seg = F.ceil(F.size("doc_ids") / F.lit(segment_size)).cast("int")
-        postings = (
-            postings.withColumn("segment", F.explode(F.sequence(F.lit(0), n_seg - 1)))
-            .withColumn(
-                "doc_ids",
-                F.slice("doc_ids", F.col("segment") * segment_size + 1, segment_size),
-            )
-        )
-    return postings
+    return _postings_rows(merged)
 
 
-def merge_postings(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """Incremental index maintenance: merge a delta postings relation into a
-    base one — union + per-term array merge, ONE shuffle on term.
+def merge_postings_colocated(base: DataFrame, delta: DataFrame) -> DataFrame:
+    """Incremental index maintenance: merge a delta postings relation into
+    a base one — a full-outer join on term, per-term array union.
 
     ``merge(build(A), build(B)) ≡ build(A ∪ B)`` for disjoint doc sets
     (posting sets union; df re-derives from the merged array), which is the
@@ -118,40 +105,16 @@ def merge_postings(base: DataFrame, delta: DataFrame) -> DataFrame:
     base corpus. Pinned by ``q_postings_merge``'s oracle, which is the
     full-rebuild SQL.
 
-    At 100 TB the merge is a co-located join if both sides are bucketed by
-    term (see tests/test_bucketing.py) — zero shuffle instead of one.
-    """
-    unioned = base.select("term", "doc_ids").unionByName(
-        delta.select("term", "doc_ids")
-    )
-    merged = unioned.groupBy("term").agg(
-        F.sort_array(F.array_distinct(F.flatten(F.collect_list("doc_ids")))).alias(
-            "doc_ids"
-        )
-    )
-    return merged.select(
-        "term",
-        F.substring("term", 1, 1).alias("letter"),
-        "doc_ids",
-        F.size("doc_ids").cast("bigint").alias("df"),
-    )
-
-
-def merge_postings_colocated(base: DataFrame, delta: DataFrame) -> DataFrame:
-    """``merge_postings`` re-expressed as a full-outer join on term, for
-    the case where the inputs are bucketed-by-term tables.
-
-    The union+groupBy formulation above always shuffles the unioned
-    relation; a join lets Spark use each side's bucketing, so when both
-    sides are bucketed by ``term`` the merge plan has ZERO exchanges
-    (pinned by tests/test_streaming.py for the streaming state path and
+    A join lets Spark use each side's bucketing, so when both sides are
+    bucketed by ``term`` the merge plan has ZERO exchanges (pinned by
+    tests/test_streaming.py for the streaming state path and
     tests/test_bucketing.py for batch). This is the 100 TB shape: the
     big maintained index is never re-shuffled to absorb a delta.
 
     The ``merge`` hint pins sort-merge: at test scale AQE would broadcast
     the tiny side (a broadcast EXCHANGE, and broadcast also ignores
     bucketing); production-size state plans SMJ on its own and the hint
-    is a no-op. Output is identical to ``merge_postings``.
+    is a no-op.
     """
     b = base.select("term", F.col("doc_ids").alias("_ids_a"))
     d = delta.select("term", F.col("doc_ids").alias("_ids_b"))
@@ -164,12 +127,7 @@ def merge_postings_colocated(base: DataFrame, delta: DataFrame) -> DataFrame:
         )
         .alias("doc_ids"),
     )
-    return merged.select(
-        "term",
-        F.substring("term", 1, 1).alias("letter"),
-        "doc_ids",
-        F.size("doc_ids").cast("bigint").alias("df"),
-    )
+    return _postings_rows(merged)
 
 
 def delete_from_postings(base: DataFrame, deleted_postings: DataFrame) -> DataFrame:
@@ -198,20 +156,13 @@ def delete_from_postings(base: DataFrame, deleted_postings: DataFrame) -> DataFr
     """
     delta = deleted_postings.select("term", F.col("doc_ids").alias("_gone"))
     joined = base.hint("merge").join(delta, "term", "left")
-    return (
+    return _postings_rows(
         joined.select(
             "term",
             F.when(F.col("_gone").isNull(), F.col("doc_ids"))
             .otherwise(F.array_except("doc_ids", "_gone"))
             .alias("doc_ids"),
-        )
-        .filter(F.size("doc_ids") > 0)
-        .select(
-            "term",
-            F.substring("term", 1, 1).alias("letter"),
-            "doc_ids",
-            F.size("doc_ids").cast("bigint").alias("df"),
-        )
+        ).filter(F.size("doc_ids") > 0)
     )
 
 

@@ -64,37 +64,14 @@ def bm25_topk(
     FOR: (doc_id, tf, dl, score, rn) for the top-k documents.
 
     ``score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`` with the
-    Lucene-style ``idf = ln((N − df + 0.5)/(df + 0.5) + 1)``.
-
-    Scale shape: ONE tokenize pass over the corpus — tf and dl come out of
-    the same per-doc aggregate (tf as a conditional count), and the
-    corpus-level stats (avgdl, df) are a second tiny aggregate over the
-    per-doc relation, not a re-scan. N comes from the documents table
-    itself (a metadata-cheap count). All counts are exact integers, so
-    scores are bit-identical across engines and partitionings.
+    Lucene-style ``idf = ln((N − df + 0.5)/(df + 0.5) + 1)``, built from
+    the same per-doc stats and contribution expression as
+    ``bm25_multi_topk``, so its scores equal ``bm25_multi_topk([term])``
+    bit for bit. One tokenize pass over the corpus; all counts are exact
+    integers, so scores are bit-identical across engines and
+    partitionings.
     """
-    from mapreduceindexer_spark.functions.text import tokens_normalized
-
-    per_doc = (
-        tokens_normalized(docs)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            F.count(F.when(F.col("term") == term, True)).cast("bigint").alias("tf"),
-        )
-    )
-    stats = docs.agg(F.count("*").alias("n_docs")).crossJoin(
-        per_doc.agg(
-            # Integer counts are exact; one IEEE double division.
-            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-            F.count(F.when(F.col("tf") > 0, True)).alias("df_t"),
-        )
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5) + 1.0
-    )
-    denom = F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    score = F.round(idf * F.col("tf") * (k1 + 1.0) / denom, 6)
+    per_doc, stats = _bm25_per_doc_stats(docs, [term])
     # Top-k FIRST via distributed TakeOrderedAndProject (each partition
     # surrenders at most k rows), THEN rank the k survivors — the global
     # row_number window only ever sees k rows, never the full match set
@@ -102,9 +79,14 @@ def bm25_topk(
     # document through one partition).
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        per_doc.filter(F.col("tf") > 0)
+        per_doc.filter(F.col("tf0") > 0)
         .crossJoin(F.broadcast(stats))
-        .select("doc_id", "tf", "dl", score.alias("score"))
+        .select(
+            "doc_id",
+            F.col("tf0").alias("tf"),
+            "dl",
+            F.round(_bm25_contrib(0, k1, b), 6).alias("score"),
+        )
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
         .withColumn("rn", F.row_number().over(w).cast("bigint"))
@@ -143,11 +125,10 @@ def top_terms(postings: DataFrame, k: int = 20) -> DataFrame:
 
 
 def _bm25_per_doc_stats(docs: DataFrame, terms: Sequence[str]):
-    """Shared BM25 preamble for the full and bound-pruned scorers: ONE
-    tokenize pass building (per_doc: doc_id, dl, tf{i}...) and the
-    single-row (stats: n_docs, avgdl, df{i}...) relation. Extracted so
-    the two scorers — whose contract is exact output EQUALITY — cannot
-    drift (round-6 review finding)."""
+    """Shared BM25 preamble for every scorer here: ONE tokenize pass
+    building (per_doc: doc_id, dl, tf{i}...) and the single-row (stats:
+    n_docs, avgdl, df{i}...) relation. Shared so the scorers — whose
+    contract is exact output EQUALITY — cannot drift."""
     from mapreduceindexer_spark.functions.text import tokens_normalized
 
     aggs = [F.count("*").cast("bigint").alias("dl")]
@@ -172,8 +153,8 @@ def _bm25_per_doc_stats(docs: DataFrame, terms: Sequence[str]):
 
 
 def _bm25_contrib(i: int, k1: float, b: float) -> "F.Column":
-    """Term i's BM25 contribution expression (identical AST in both
-    scorers; the oracle replays the same grouping)."""
+    """Term i's BM25 contribution expression (identical AST in every
+    scorer; the oracle replays the same grouping)."""
     idf = F.log(
         (F.col("n_docs") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
         + 1.0

@@ -16,12 +16,9 @@ Spark mapping:
   partitions, so the a..z completeness guarantee is restored driver-side
   with 26 cheap metadata touches — not a data-path operation.
 
-At 100 TB: ``partitionBy`` would produce multiple files per letter
-(one per task) — the per-letter order contract then becomes "files are
-range-named and each is sorted", restored on read with a merge. For exact
-one-file-per-letter parity (what the golden test checks) the 26-partition
-repartition is fine: 26 tasks is the contract's inherent parallelism
-ceiling, exactly as the reference's 26 output files are.
+For exact one-file-per-letter parity (what the golden test checks) the
+26-partition repartition is fine: 26 tasks is the contract's inherent
+parallelism ceiling, exactly as the reference's 26 output files are.
 """
 
 from __future__ import annotations
@@ -64,92 +61,3 @@ def read_index_letter(out_dir: str, letter: str) -> list[str]:
             with open(os.path.join(d, name), encoding="utf-8") as fh:
                 lines.extend(fh.read().splitlines())
     return lines
-
-
-def write_index_sharded(
-    postings: DataFrame, out_dir: str, shards_per_letter: int = 4
-) -> None:
-    """The 100 TB relaxation of the sink contract (module docstring):
-    N SORTED files per letter instead of one, written by
-    ``26 × shards_per_letter`` parallel tasks — the parallelism ceiling
-    stops being 26, which is the whole point of relaxing. Rows shard by
-    a term hash (any deterministic spread works: a k-way merge of
-    sorted runs is order-correct regardless of which run a row landed
-    in); each task sorts its (letter, shard) slice by (df DESC, term
-    ASC), so every ``letter=<c>/part-*`` file is an internally sorted
-    run and ``read_index_letter_merged`` restores the exact one-file
-    byte contract on read.
-
-    Contract: ``postings`` must be UNSEGMENTED (one line per term, so
-    ``df`` equals the id count) — the merge recovers its sort key from
-    each line's id count, and a segmented relation (df = full-term df
-    on every partial-ids row) would silently merge out of order. The
-    guard below fails loudly at the first offending row instead
-    (round-7 review finding); it is one integer compare per row,
-    nothing shuffles."""
-    checked_df = F.when(
-        F.size("doc_ids").cast("bigint") == F.col("df"), F.col("df")
-    ).otherwise(
-        F.raise_error(
-            F.format_string(
-                "write_index_sharded: term %s has df=%s but %s ids — "
-                "segmented postings cannot round-trip through "
-                "merge-on-read (the merge key is recovered from each "
-                "line's id count)",
-                F.col("term"),
-                F.col("df"),
-                F.size("doc_ids").cast("bigint"),
-            )
-        ).cast("bigint")
-    )
-    lines = index_lines(postings.withColumn("df", checked_df))
-    shard = F.pmod(F.hash("term"), F.lit(shards_per_letter))
-    (
-        lines.repartition(26 * shards_per_letter, F.col("letter"), shard)
-        .sortWithinPartitions(F.asc("letter"), F.desc("df"), F.asc("term"))
-        .select("letter", "line")
-        .write.partitionBy("letter")
-        .mode("overwrite")
-        .text(out_dir)
-    )
-    for c in string.ascii_lowercase:
-        os.makedirs(os.path.join(out_dir, f"letter={c}"), exist_ok=True)
-
-
-def _index_line_sort_key(line: str) -> tuple[int, str]:
-    """(−df, term) for a ``term:[id1 id2 …]`` line — df is recoverable
-    from the line itself (the id count), so the merge needs no sidecar
-    metadata."""
-    term, _, rest = line.partition(":")
-    ids = rest.strip()[1:-1].split()
-    return (-len(ids), term)
-
-
-def read_index_letter_merged(out_dir: str, letter: str) -> list[str]:
-    """Merge-on-read for the sharded sink: STREAMING k-way merge of one
-    letter's sorted part-files on (df DESC, term ASC) — ``heapq.merge``
-    over line ITERATORS holds one buffered line per open file, never a
-    letter's full contents, which is the read-side cost model that
-    makes N-files-per-letter viable at 100 TB (a concat-then-sort, or
-    reading whole files into lists first, would re-pay the memory the
-    sharding exists to avoid — round-7 review finding). The returned
-    LIST materializes for the test harness; a production reader
-    consumes the generator form. Output is byte-identical to the
-    one-file contract (pinned against the golden corpus in
-    tests/test_golden_full.py)."""
-    import heapq
-    from contextlib import ExitStack
-
-    d = os.path.join(out_dir, f"letter={letter}")
-    names = [
-        n
-        for n in sorted(os.listdir(d))
-        if n.startswith(("part-", "part_")) and not n.endswith(".crc")
-    ]
-    with ExitStack() as stack:
-        runs = [
-            (line.rstrip("\n") for line in
-             stack.enter_context(open(os.path.join(d, n), encoding="utf-8")))
-            for n in names
-        ]
-        return list(heapq.merge(*runs, key=_index_line_sort_key))

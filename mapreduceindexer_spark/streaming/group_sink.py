@@ -14,8 +14,8 @@ the next successful batch's pin set is again mutually consistent.
 
 The index member is maintained INCREMENTALLY: postings built over the
 batch only, merged into the prior index state
-(``operators/index.merge_postings`` — merge ≡ rebuild contract), so the
-stream never re-tokenizes committed documents.
+(``operators/index.merge_postings_colocated`` — merge ≡ rebuild
+contract), so the stream never re-tokenizes committed documents.
 """
 
 from __future__ import annotations
@@ -24,7 +24,10 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-from mapreduceindexer_spark.operators.index import build_postings, merge_postings
+from mapreduceindexer_spark.operators.index import (
+    build_postings,
+    merge_postings_colocated,
+)
 from mapreduceindexer_spark.sources.group import TableGroup
 from mapreduceindexer_spark.sources.transact import TransactionalTable
 
@@ -61,7 +64,7 @@ def _ingest_batch(
         delta = build_postings(cp)
         if idx_table.current_version() > 0:
             prior = idx_table.read(cp.sparkSession)
-            new_idx = merge_postings(prior, delta)
+            new_idx = merge_postings_colocated(prior, delta)
         else:
             new_idx = delta
         idx_table.commit(

@@ -61,39 +61,6 @@ def test_full_index_matches_golden(full_corpus, tmp_path):
     assert total == 33262  # BASELINE.md index size
 
 
-def test_full_index_sharded_merges_back_to_golden(full_corpus, tmp_path):
-    """The 100 TB sink relaxation, end-to-end on the full golden corpus:
-    N sorted files per letter (write_index_sharded) + streaming k-way
-    merge on read must be BYTE-IDENTICAL to the golden one-file
-    contract — and the relaxation must actually be exercised (most
-    letters really get >1 part-file)."""
-    from mapreduceindexer_spark.operators.index import build_postings
-    from mapreduceindexer_spark.operators.sink import (
-        read_index_letter_merged,
-        write_index_sharded,
-    )
-
-    out = str(tmp_path / "index_sharded")
-    write_index_sharded(
-        build_postings(full_corpus, salt_buckets=16), out, shards_per_letter=4
-    )
-    total = 0
-    multi_file_letters = 0
-    for letter in string.ascii_lowercase:
-        got = read_index_letter_merged(out, letter)
-        expected = golden_lines(letter)
-        assert got == expected, (
-            f"letter {letter}: {len(got)} vs {len(expected)} lines; "
-            f"first diff: {next((g, e) for g, e in zip(got, expected) if g != e)}"
-        )
-        total += len(got)
-        d = os.path.join(out, f"letter={letter}")
-        n_parts = len([f for f in os.listdir(d) if f.startswith("part-")])
-        multi_file_letters += n_parts > 1
-    assert total == 33262
-    assert multi_file_letters >= 20, multi_file_letters
-
-
 @pytest.mark.parametrize("nparts", [2, 8, 32])
 def test_full_index_independent_of_parallelism(
     spark, full_corpus, tmp_path, nparts
@@ -127,57 +94,6 @@ def test_full_index_independent_of_parallelism(
         got = read_index_letter(out, letter)
         assert got == golden_lines(letter), (
             f"parallelism {nparts} changed letter {letter}"
-        )
-        total += len(got)
-    assert total == 33262
-
-
-@pytest.mark.parametrize("segment_size", [64, 257])
-def test_full_index_with_production_dials_matches_golden(
-    full_corpus, tmp_path, segment_size
-):
-    """Round-9 verdict item 8: the golden gate with the PRODUCTION
-    dials live, not just defaults — salt_buckets=16 (the skew knob) ×
-    a segment_size sweep (the task-memory cap). Segmented postings are
-    reassembled RELATIONALLY (group by term, flatten segments in
-    order — the documented consumer contract) and the 26 letter files
-    must stay byte-equal to the golden outputs: scale hardening must
-    never bend reference semantics."""
-    from pyspark.sql import functions as F
-
-    from mapreduceindexer_spark.operators.index import build_postings
-    from mapreduceindexer_spark.operators.sink import (
-        read_index_letter,
-        write_index,
-    )
-
-    seg = build_postings(
-        full_corpus, salt_buckets=16, segment_size=segment_size
-    )
-    assert "segment" in seg.columns
-    # Consumer-side reassembly, fully relational: order segments per
-    # term, flatten, recompute df — no driver-side loops.
-    postings = (
-        seg.groupBy("term", "letter")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("segment", "doc_ids"))
-                    ),
-                    lambda s: s["doc_ids"],
-                )
-            ).alias("doc_ids")
-        )
-        .withColumn("df", F.size("doc_ids"))
-    )
-    out = str(tmp_path / f"idx_seg{segment_size}")
-    write_index(postings, out)
-    total = 0
-    for letter in string.ascii_lowercase:
-        got = read_index_letter(out, letter)
-        assert got == golden_lines(letter), (
-            f"segment_size {segment_size} changed letter {letter}"
         )
         total += len(got)
     assert total == 33262

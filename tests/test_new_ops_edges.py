@@ -363,17 +363,26 @@ def test_twolevel_assignment_matches_flat_on_clustered_data(spark):
 
 def test_bm25_pruned_equals_full_and_actually_prunes(spark):
     """Pruned BM25 returns the IDENTICAL top-k as the full scorer for
-    several query shapes, and never exact-scores more docs than match."""
+    several query shapes, and never exact-scores more docs than match.
+    For single-term queries (incl. a hot term and a missing one) the
+    single-term ranker returns the identical top-k as well."""
     from mapreduceindexer_spark.operators.search import (
         bm25_multi_topk,
         bm25_pruned_topk,
+        bm25_topk,
     )
     from tests.conftest import SF_SMOKE
 
     from mapreduceindexer_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    for terms in (("table", "window", "stream"), ("join", "zq"), ("scan",)):
+    for terms in (
+        ("table", "window", "stream"),
+        ("join", "zq"),
+        ("scan",),
+        ("query",),  # hot: in 415 of the 500 docs
+        ("zq",),  # in no doc
+    ):
         full = [
             (r["doc_id"], r["score"], r["rn"])
             for r in bm25_multi_topk(docs, terms, k=5).collect()
@@ -381,6 +390,12 @@ def test_bm25_pruned_equals_full_and_actually_prunes(spark):
         pruned_rows = bm25_pruned_topk(docs, terms, k=5).collect()
         pruned = [(r["doc_id"], r["score"], r["rn"]) for r in pruned_rows]
         assert sorted(pruned) == sorted(full), terms
+        if len(terms) == 1:
+            single = [
+                (r["doc_id"], r["score"], r["rn"])
+                for r in bm25_topk(docs, terms[0], k=5).collect()
+            ]
+            assert sorted(single) == sorted(full), terms
         if pruned_rows:
             n_scored = pruned_rows[0]["n_scored"]
             n_matching = bm25_multi_topk(docs, terms, k=10**6).count()

@@ -77,6 +77,21 @@ def test_postings_pipeline_is_fused(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_unsalted_postings_build_is_single_hash_exchange(spark):
+    from mapreduceindexer_spark.operators.index import build_postings
+    from mapreduceindexer_spark.plans import explain_str
+    from mapreduceindexer_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    plan = explain_str(build_postings(docs), "simple")
+    # The default (unsalted) build: one hash exchange on term, fed by a
+    # map-side partial collect_set that dedups (term, doc_id) before the
+    # shuffle. Any other Exchange is the test-file parallelism round-robin.
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    exchange = plan.index("Exchange hashpartitioning")
+    assert "partial_collect_set" in plan[exchange:], plan
+
+
 def test_top_terms_plans_take_ordered(spark):
     from mapreduceindexer_spark.catalog import QUERIES
     from mapreduceindexer_spark.plans import explain_str

@@ -85,7 +85,7 @@ def test_lsh_finds_every_exact_replica(spark, docs):
 def test_salted_aggregation_under_extreme_skew(spark):
     """A term present in EVERY document (the 100 TB stopword scenario,
     maximally skewed) must aggregate correctly through the salted two-level
-    path and the segmented variant must reassemble to the same postings."""
+    path: one complete, ordered posting row."""
     from mapreduceindexer_spark.operators.index import build_postings
 
     n = 20_000
@@ -103,15 +103,6 @@ def test_salted_aggregation_under_extreme_skew(spark):
     assert len(hot) == 1
     assert hot[0].df == n
     assert list(hot[0].doc_ids) == list(range(1, n + 1))
-    # Segmenting caps row width; reassembly over segments is exact.
-    seg = build_postings(docs, salt_buckets=16, segment_size=1000).filter(
-        F.col("term") == "common"
-    )
-    rows = sorted((r.segment, list(r.doc_ids)) for r in seg.collect())
-    assert len(rows) == n // 1000
-    assert all(len(ids) == 1000 for _, ids in rows)
-    flattened = [i for _, ids in rows for i in ids]
-    assert flattened == list(range(1, n + 1))
     # Distinct-term count is intact: one hot term + n unique terms.
     assert postings.count() == n + 1
 
@@ -128,10 +119,9 @@ def test_salting_bounds_hot_term_fanin_at_500k(spark):
        min(salt_buckets, n) pre-aggregated arrays for the hot term
        (operators/index.salted_partials, the first level build_postings
        uses), so no single task ever sees the hot term's n raw rows.
-    2. Exactness at load — the full 500 k salted+segmented build returns
-       the hot term complete and ordered, and segment reassembly is
-       exact. (Wall-clock salted-vs-unsalted numbers live in PLANS.md;
-       timing assertions don't belong in CI.)
+    2. Exactness at load — the full 500 k salted build returns the hot
+       term as one complete, ordered row. (Wall-clock salted-vs-unsalted
+       numbers live in PLANS.md; timing assertions don't belong in CI.)
     """
     from mapreduceindexer_spark.operators.index import (
         build_postings,
@@ -157,14 +147,13 @@ def test_salting_bounds_hot_term_fanin_at_500k(spark):
     ).collect()[0].m
     assert max_slice < n, max_slice
     assert max_slice >= n // 16 // 2  # roughly balanced, not degenerate
-    # Pin 2: end-to-end exactness through salt + segment at 500 k.
-    seg = build_postings(docs, salt_buckets=16, segment_size=100_000).filter(
+    # Pin 2: end-to-end exactness through the salted build at 500 k.
+    hot = build_postings(docs, salt_buckets=16).filter(
         F.col("term") == "and"
-    )
-    rows = sorted((r.segment, list(r.doc_ids)) for r in seg.collect())
-    assert [s for s, _ in rows] == [0, 1, 2, 3, 4]
-    flattened = [i for _, ids in rows for i in ids]
-    assert flattened == list(range(1, n + 1))
+    ).collect()
+    assert len(hot) == 1
+    assert hot[0].df == n
+    assert list(hot[0].doc_ids) == list(range(1, n + 1))
 
 
 def test_lsh_bucket_guard_bounds_degenerate_corpus(spark):
