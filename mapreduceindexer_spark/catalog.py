@@ -1262,6 +1262,7 @@ def q_events_session(spark, sf_dir):
 # LLM-data-pipeline operators: dedup / similarity / text analysis / multimodal
 # ---------------------------------------------------------------------------
 
+from mapreduceindexer_spark.functions.vector import sq_l2  # noqa: E402
 from mapreduceindexer_spark.operators import dedup as dd  # noqa: E402
 from mapreduceindexer_spark.operators import multimodal as mm  # noqa: E402
 from mapreduceindexer_spark.operators import similarity as sim  # noqa: E402
@@ -1761,7 +1762,7 @@ def q_cluster_sizes(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     cents = sim.kmeans_centroids(e, k=8, iters=2)
     scored = e.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "centroid_id", sim._sq_l2_to_centroid().alias("d2")
+        "vec_id", "centroid_id", sq_l2("embedding", "cvec").alias("d2")
     )
     # Window-free argmin (see similarity.assign_to_centroids): the min
     # struct carries both the winning cell and its distance.
@@ -8608,7 +8609,7 @@ def q_ann_graph(spark, sf_dir):
     return sim.ann_graph_search(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS, k_edges=3, n_centroids=8,
+        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS,
         edges=_nsw_edges_staged(spark, sf_dir),
     )
 
@@ -8649,8 +8650,7 @@ def q_ann_graph_recall(spark, sf_dir):
     return sim.ann_graph_recall(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS, k_edges=3, n_centroids=8,
-        floor_permille=200,
+        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS, floor_permille=200,
         edges=_nsw_edges_staged(spark, sf_dir),
     )
 
@@ -8661,12 +8661,15 @@ def _sql_filtered_walk_tail(walk_cte: str, exclude_self: bool) -> str:
     serving filtered queries, so a change to the fallback gate can
     never desynchronize the trio. ``exclude_self`` is the only real
     difference: in-corpus probes exclude their own node; external
-    probe ids are disjoint from corpus ids."""
+    probe ids are disjoint from corpus ids. ``m`` is MATERIALIZED: the
+    count gate and the ranked union both read it, and inlining it twice
+    re-expands the unmaterialized hop-unrolled walk (the 5-hop HNSW
+    walks ran DuckDB out of memory)."""
     self_m = " AND v.vec_id <> v.probe_id" if exclude_self else ""
     self_ex = "ev.vec_id <> p.probe_id" if exclude_self else "TRUE"
     return f""",
  lab AS (SELECT vec_id, label FROM embeddings),
- m AS (SELECT v.probe_id, v.vec_id, v.cos_sim
+ m AS MATERIALIZED (SELECT v.probe_id, v.vec_id, v.cos_sim
        FROM {walk_cte} v JOIN lab l ON l.vec_id = v.vec_id
        WHERE l.label = {FILTER_LABEL}{self_m}),
  nc AS (SELECT p.probe_id,
@@ -8697,8 +8700,8 @@ def _sql_filtered_walk_tail(walk_cte: str, exclude_self: bool) -> str:
     + _sql_filtered_walk_tail(f"v{_NSW_HOPS}", exclude_self=True),
 )
 def q_ann_graph_filtered(spark, sf_dir):
-    """FILTERED graph-ANN (operators/similarity.py::
-    ann_graph_search_filtered): the standard filtered-HNSW strategy —
+    """FILTERED graph-ANN (operators/similarity.py::ann_graph_search
+    with label=): the standard filtered-HNSW strategy —
     the beam walk ROUTES through non-matching nodes unfiltered
     (filtering the routing graph fragments it), and the label predicate
     applies at the final ranking, with a PER-PROBE sound fallback: any
@@ -8707,12 +8710,12 @@ def q_ann_graph_filtered(spark, sf_dir):
     collect; n_cand + fallback are value-checked per probe). Completes
     the filtered-search story across both index families (IVF:
     q_ann_filtered_ivf)."""
-    return sim.ann_graph_search_filtered(
+    return sim.ann_graph_search(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        label=FILTER_LABEL,
-        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS, k_edges=3, n_centroids=8,
+        k=_NSW_K, ef=_NSW_EF, hops=_NSW_HOPS,
         edges=_nsw_edges_staged(spark, sf_dir),
+        label=FILTER_LABEL,
     )
 
 
@@ -8827,7 +8830,7 @@ def q_ann_hnsw(spark, sf_dir):
     return sim.ann_graph_search(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3, n_centroids=8,
+        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS,
         edges=_hnsw_edges_staged(spark, sf_dir),
     )
 
@@ -8866,8 +8869,7 @@ def q_ann_hnsw_recall(spark, sf_dir):
     return sim.ann_graph_recall(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3, n_centroids=8,
-        floor_permille=200,
+        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, floor_permille=200,
         edges=_hnsw_edges_staged(spark, sf_dir),
     )
 
@@ -8922,8 +8924,7 @@ def q_ann_hnsw_scaled(spark, sf_dir):
     return sim.ann_graph_search(
         _t(spark, sf_dir, "embeddings"),
         list(ANN_RECALL_PROBES),
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3, n_centroids=8,
-        edges=edges,
+        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, edges=edges,
     )
 
 
@@ -8995,8 +8996,8 @@ def q_ann_external(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     qv = _ext_query_vectors(emb)
     return sim.ann_graph_search_vectors(
-        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3,
-        n_centroids=8, edges=_hnsw_edges_staged(spark, sf_dir),
+        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS,
+        edges=_hnsw_edges_staged(spark, sf_dir),
     )
 
 
@@ -9037,8 +9038,7 @@ def q_ann_external_recall(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     qv = _ext_query_vectors(emb)
     return sim.ann_graph_recall_vectors(
-        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3,
-        n_centroids=8, floor_permille=200,
+        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, floor_permille=200,
         edges=_hnsw_edges_staged(spark, sf_dir),
     )
 
@@ -9050,7 +9050,7 @@ def q_ann_external_recall(spark, sf_dir):
 )
 def q_ann_external_filtered(spark, sf_dir):
     """FILTERED search on the SERVING path (operators/similarity.py::
-    ann_graph_search_vectors_filtered): external query vectors + label
+    ann_graph_search_vectors with label=): external query vectors + label
     predicate + per-probe sound fallback — "the 5 nearest label-3 docs
     to this fresh embedding", the full production request in one
     operator. Entry-only seeding over the SAME staged HNSW index as
@@ -9061,10 +9061,9 @@ def q_ann_external_filtered(spark, sf_dir):
     whole filtered slice."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = _ext_query_vectors(emb)
-    return sim.ann_graph_search_vectors_filtered(
-        emb, qv, label=FILTER_LABEL,
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, k_edges=3,
-        n_centroids=8, edges=_hnsw_edges_staged(spark, sf_dir),
+    return sim.ann_graph_search_vectors(
+        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS,
+        edges=_hnsw_edges_staged(spark, sf_dir), label=FILTER_LABEL,
     )
 
 
@@ -9111,14 +9110,14 @@ def q_ann_serving_table(spark, sf_dir):
     q_ann_external by construction — same walk, same edge rows, same
     oracle SQL — which is exactly the point: persistence and pruning
     must be invisible in the values and visible only in the scan.
-    operators/similarity.py::persist_graph_index,
-    ann_graph_search_vectors_table; sources/transact.py::compact_clustered."""
+    operators/similarity.py::persist_graph_index, graph_index_edges;
+    sources/transact.py::compact_clustered."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = _ext_query_vectors(emb)
     table, v = _hnsw_serving_table(spark, sf_dir)
-    return sim.ann_graph_search_vectors_table(
-        spark, table, emb, qv,
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, version=v,
+    return sim.ann_graph_search_vectors(
+        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS,
+        edges=sim.graph_index_edges(spark, table, v),
     )
 
 
@@ -9138,15 +9137,14 @@ def q_ann_serving_filtered(spark, sf_dir):
     storage (q_ann_serving_table), filtering (q_ann_external_filtered),
     and the walk compose without touching each other, and the oracle is
     the staged filtered walk verbatim: persistence must be invisible in
-    the values. operators/similarity.py::ann_graph_search_vectors_table
-    (label=...)."""
+    the values. operators/similarity.py::ann_graph_search_vectors
+    (edges=graph_index_edges(...), label=...)."""
     emb = _t(spark, sf_dir, "embeddings")
     qv = _ext_query_vectors(emb)
     table, v = _hnsw_serving_table(spark, sf_dir)
-    return sim.ann_graph_search_vectors_table(
-        spark, table, emb, qv,
-        k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS, version=v,
-        label=FILTER_LABEL,
+    return sim.ann_graph_search_vectors(
+        emb, qv, k=_NSW_K, ef=_NSW_EF, hops=_HNSW_HOPS,
+        edges=sim.graph_index_edges(spark, table, v), label=FILTER_LABEL,
     )
 
 
@@ -12707,7 +12705,7 @@ def q_table_bloom_skip_many(spark, sf_dir):
     oracle replays that exact per-(dir, probe) bit decision
     relationally, so even a false positive matches bit-for-bit. This
     is the pruning path the HNSW serving walk runs per hop
-    (operators/similarity.py::ann_graph_search_vectors_table). Scale:
+    (operators/similarity.py::graph_index_edges). Scale:
     a k-id multi-get on a 100 TB append-heavy table touches the ≤ k
     snapshots that can hold the ids, at one manifest resolve."""
     import shutil

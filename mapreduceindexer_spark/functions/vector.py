@@ -36,6 +36,19 @@ def l2_norm(a: Column | str) -> Column:
     )
 
 
+def sq_l2(a: Column | str, b: Column | str) -> Column:
+    """Squared L2 distance in double, rounded to 6 decimals — the rounding
+    absorbs last-ulp accumulation differences, so argmins over it (IVF
+    cell assignment, PQ sub-distances) replay exactly in the oracle."""
+    diffs = F.zip_with(
+        _c(a),
+        _c(b),
+        lambda x, y: (x.cast("double") - y.cast("double"))
+        * (x.cast("double") - y.cast("double")),
+    )
+    return F.round(F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v), 6)
+
+
 def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; 0.0 when either vector has zero norm."""
     d = dot(a, b)

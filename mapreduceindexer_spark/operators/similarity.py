@@ -1,18 +1,29 @@
 """Similarity search over embedding columns (``ARRAY<FLOAT>``).
 
-Two tiers:
+Five tiers, one scoring rule:
 
 - **Brute-force cosine top-k** — the correctness baseline. For a single
   probe this is a broadcast of one row against a full scan: linear, one
   pass, no shuffle except the final top-k (TakeOrderedAndProject). Never
   an all-pairs crossJoin.
-- **IVF (inverted-file) top-k** — the scale path: vectors are assigned to
-  coarse cells (nearest of ``n_centroids`` centroid vectors); a probe
-  searches only its own cell. Here centroids are a deterministic sample
-  (lowest vec_ids) so the DuckDB oracle can replay the exact assignment;
-  production would k-means them (same query shape, different centroid
-  table). At 100 TB the assignment output is written bucketed by cell so
-  probes prune to one bucket — partition pruning does the fan-in.
+- **IVF (inverted-file) top-k** — vectors are assigned to coarse cells
+  (nearest of ``n_centroids`` centroid vectors); a probe searches only
+  its nearest cells. Centroids are a deterministic sample (lowest
+  vec_ids) so the DuckDB oracle can replay the exact assignment, or
+  k-means-trained (same query shape, different centroid table).
+- **Graph ANN (NSW/HNSW)** — a navigable edge-with-payload graph, built
+  once, walked best-first. ONE walk serves every probe kind:
+  ``ann_graph_search`` (in-corpus probe ids, seeded at the entry node and
+  the probe's own node) and ``ann_graph_search_vectors`` (external query
+  vectors, seeded at the entry node only). ``edges`` is either the edge
+  relation or a per-hop reader (``graph_index_edges`` over a persisted
+  index); ``label`` filters at the final ranking, never the routing.
+  ``ann_graph_recall`` / ``ann_graph_recall_vectors`` / ``ann_recall``
+  meter the approximations against one exact top-k (``_exact_topk``).
+- **PQ / IVF-PQ** — product-quantized sub-distances against a
+  deterministic codebook.
+- **SRP** — signed-random-projection bands for near-duplicate candidate
+  pairs.
 
 All arithmetic in double via JVM higher-order functions
 (``functions/vector.py``) — no Python UDFs. Ranks are total-ordered
@@ -22,10 +33,17 @@ are engine-independent.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduceindexer_spark.functions.vector import cosine_similarity, l2_norm
+from mapreduceindexer_spark.functions.vector import (
+    cosine_similarity,
+    dot,
+    l2_norm,
+    sq_l2,
+)
 
 
 def vector_norms(embeddings: DataFrame) -> DataFrame:
@@ -77,22 +95,6 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _sq_l2_to_centroid() -> "F.Column":
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                "cvec",
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
-
-
 def assign_to_centroids(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, cell): nearest centroid per vector (squared-L2, ties →
     lowest centroid id). ``centroids`` = (centroid_id, cvec), broadcast.
@@ -105,30 +107,12 @@ def assign_to_centroids(embeddings: DataFrame, centroids: DataFrame) -> DataFram
     vector. Same output, window-free.
     """
     scored = embeddings.crossJoin(F.broadcast(centroids)).select(
-        "vec_id", "centroid_id", _sq_l2_to_centroid().alias("d2")
+        "vec_id", "centroid_id", sq_l2("embedding", "cvec").alias("d2")
     )
     return (
         scored.groupBy("vec_id")
         .agg(F.min(F.struct("d2", "centroid_id")).alias("m"))
         .select("vec_id", F.col("m.centroid_id").alias("cell"))
-    )
-
-
-def _sq_l2_cols(a, b) -> "F.Column":
-    """Rounded squared-L2 between two array columns (the
-    ``_sq_l2_to_centroid`` idiom, parameterized)."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                a,
-                b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
     )
 
 
@@ -199,7 +183,7 @@ def assign_to_centroids_twolevel(
         .select(
             "centroid_id",
             "coarse_id",
-            _sq_l2_cols(F.col("cvec"), F.col("ccvec")).alias("d2"),
+            sq_l2("cvec", "ccvec").alias("d2"),
         )
         .groupBy("centroid_id")
         .agg(F.min(F.struct("d2", "coarse_id")).alias("m"))
@@ -211,7 +195,7 @@ def assign_to_centroids_twolevel(
         .select(
             "vec_id",
             "coarse_id",
-            _sq_l2_cols(F.col("embedding"), F.col("ccvec")).alias("d2"),
+            sq_l2("embedding", "ccvec").alias("d2"),
         )
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "coarse_id")).alias("m"))
@@ -223,7 +207,7 @@ def assign_to_centroids_twolevel(
         .select(
             "vec_id",
             "centroid_id",
-            _sq_l2_cols(F.col("embedding"), F.col("cvec")).alias("d2"),
+            sq_l2("embedding", "cvec").alias("d2"),
         )
         .groupBy("vec_id")
         .agg(F.min(F.struct("d2", "centroid_id")).alias("m"))
@@ -369,7 +353,7 @@ def lloyd_rounds(
         else:
             scored = embeddings.crossJoin(F.broadcast(cents)).select(
                 "vec_id", "embedding", "centroid_id",
-                _sq_l2_to_centroid().alias("d2"),
+                sq_l2("embedding", "cvec").alias("d2"),
             )
             # Same window-free argmin as assign_to_centroids; the
             # embedding is constant per vec_id, so first() is
@@ -435,21 +419,8 @@ def _nearest_probe_cells(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
     )
     probe_vec0 = embeddings.filter(F.col("vec_id") == probe_id)
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                "embedding",
-                "cvec",
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
     scored_cells = probe_vec0.crossJoin(F.broadcast(centroids)).select(
-        "centroid_id", d2.alias("d2")
+        "centroid_id", sq_l2("embedding", "cvec").alias("d2")
     )
     wc = Window.orderBy(F.asc("d2"), F.asc("centroid_id"))
     return (
@@ -622,8 +593,6 @@ def embedding_drift(embeddings: DataFrame, mod: int = 2) -> DataFrame:
     Output: (label, n_ref, n_new, centroid_cos) — cos near 1.0 means
     the halves agree; the monitor's consumer thresholds it.
     """
-    from mapreduceindexer_spark.functions.vector import cosine_similarity
-
     ex = embeddings.select(
         "label",
         (F.col("vec_id") % mod).alias("h"),
@@ -1022,12 +991,7 @@ def ann_batch_topk(
             ),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return scored.withColumn(
-        "rn", F.row_number().over(w).cast("bigint")
-    ).filter(F.col("rn") <= k)
+    return _rank_per_probe(scored, k)
 
 
 def principal_component(
@@ -1157,8 +1121,6 @@ def _enrich_with_cells(embeddings: DataFrame, cells: DataFrame) -> DataFrame:
     reads this bounded relation instead. ``nrm`` is the same
     ``l2_norm(embedding)`` expression as ever, so every downstream
     cosine is bit-identical."""
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
     return embeddings.join(cells, "vec_id").withColumn(
         "nrm", l2_norm("embedding")
     )
@@ -1200,8 +1162,6 @@ def _knn_topk_enriched(e: DataFrame, k: int) -> DataFrame:
     element-by-element and ``nrm_a*nrm_b == nrm_b*nrm_a`` — the oracle
     replays the same value either way (pinned by the edge-identity
     tests and the recall contracts)."""
-    from mapreduceindexer_spark.functions.vector import dot
-
     left = e.select(
         "vec_id", F.col("embedding").alias("va"), F.col("nrm").alias("nrm_a"), "cell"
     )
@@ -1418,8 +1378,6 @@ def _hnsw_upper_edges(
     computed HERE over the hub relation only (hubs-many rows), so a
     caller whose member state carries no ``nrm`` pays nothing
     corpus-sized."""
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
     hubs = members.groupBy("cell").agg(F.min("vec_id").alias("hub_id"))
     # One row per cell: tiny, but feeds three branches — stage it.
     hub_vecs = (
@@ -1465,8 +1423,6 @@ def hnsw_payload_join(embeddings: DataFrame, edges: DataFrame) -> DataFrame:
     relation — the final step of every HNSW build, shared with the
     maintenance stream (which stores id pairs as state and re-attaches
     payload from the members table on read)."""
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
     payload = embeddings.select(
         F.col("vec_id").alias("nbr_id"),
         F.col("embedding").alias("nbr_vec"),
@@ -1572,17 +1528,18 @@ def ann_graph_search(
     k: int = 5,
     ef: int = 4,
     hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
-    edges: DataFrame | None = None,
+    *,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
+    label: int | None = None,
 ) -> DataFrame:
-    """Graph-based ANN: hop-synchronized BEAM SEARCH over the two-layer
-    navigable graph (``nsw_graph_edges``) from a fixed global entry
-    point — the NSW/HNSW query algorithm as a batch of relational hops.
-    ``edges`` lets a caller pass a prebuilt (materialized) edge relation
-    — the graph is the INDEX, built once and probed by every search and
-    audit, which is how the catalog shares it between q_ann_graph and
-    q_ann_graph_recall via the session staging registry.
+    """Graph-based ANN: hop-synchronized BEAM SEARCH over a navigable
+    edge-with-payload graph (``nsw_graph_edges`` / ``hnsw_graph_edges``)
+    from a fixed global entry point — the NSW/HNSW query algorithm as a
+    batch of relational hops, for in-corpus probes. The graph is the
+    INDEX, built once and probed by every search and audit: ``edges`` is
+    either the staged edge relation or a per-hop reader
+    (``graph_index_edges`` over a persisted index) — same walk, same
+    rows.
 
     This is the BEST-FIRST search of the NSW papers, hop-synchronized:
     the visited set tracks which nodes have been EXPANDED, and each hop
@@ -1595,8 +1552,8 @@ def ann_graph_search(
     expansions, so the walk keeps descending the similarity surface —
     entry → hubs → best cells' members → their in-cell KNN refinement.
     The walk is seeded with BOTH the global entry and the probe's own
-    node (for in-corpus self-queries the probe's neighborhood is the
-    goal; an external query vector would seed entry-only — same plan).
+    node (the probe's neighborhood is the goal); external query vectors
+    seed entry-only (``ann_graph_search_vectors``).
 
     Scale shape: the probe relation is bounded (broadcast on every
     join); each hop is one pass over the checkpointed edge relation
@@ -1612,30 +1569,15 @@ def ann_graph_search(
 
     Output: (probe_id, vec_id, cos_sim, rn ≤ k) — the probe itself is
     excluded from the final ranking (it is reachable mid-walk, which is
-    what pulls the beam into its own neighborhood).
+    what pulls the beam into its own neighborhood). With ``label`` the
+    ranking is FILTERED (see ``_filtered_visited_rank``) and adds
+    (n_cand, fallback).
     """
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
-    if edges is None:
-        edges = nsw_graph_edges(embeddings, k_edges, n_centroids).localCheckpoint()
-    probes = (
-        embeddings.filter(F.col("vec_id").isin(list(probe_ids)))
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("pv"),
-            l2_norm("embedding").alias("pnrm"),
-        )
-        .localCheckpoint()
+    probes = embeddings.filter(F.col("vec_id").isin(list(probe_ids))).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv")
     )
-    seed_entry = _entry_seed(embeddings, probes)
-    seed_self = probes.select(
-        "probe_id",
-        F.col("probe_id").alias("vec_id"),
-        F.lit(1.0).alias("cos_sim"),
-        F.lit(False).alias("expanded"),
-    )
-    return _graph_beam_walk(
-        edges, probes, seed_entry.unionAll(seed_self), k, ef, hops
+    return _graph_search(
+        embeddings, probes, k, ef, hops, edges, label, seed_self=True
     )
 
 
@@ -1645,9 +1587,9 @@ def ann_graph_search_vectors(
     k: int = 5,
     ef: int = 4,
     hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
-    edges: DataFrame | None = None,
+    *,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
+    label: int | None = None,
 ) -> DataFrame:
     """The SERVING path of the graph-ANN tier: search with EXTERNAL
     query vectors — embeddings that are NOT corpus nodes (a user query,
@@ -1655,28 +1597,19 @@ def ann_graph_search_vectors(
     in production. ``query_vectors`` = (probe_id, qv) with probe_ids
     disjoint from corpus vec_ids.
 
-    Identical hop-synchronized best-first walk as ``ann_graph_search``
-    (same ``_graph_beam_walk``, same edge relation — ONE index serves
+    The identical walk as ``ann_graph_search`` (ONE index serves
     in-corpus audits and external queries alike), differing only in the
     seed: an external query has no self node, so the walk seeds
-    entry-only, exactly as the NSW papers' query algorithm does. The
-    probe relation is bounded and broadcast on every join; per-query
-    cost is hops × ef × max-out-degree edge expansions — independent of
-    corpus size given the index, which is the serving contract.
-    Deterministic end-to-end (rounded cosine, id-ascending ties), so the
-    DuckDB oracle replays the full walk for literal query vectors.
-    """
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
-    if edges is None:
-        edges = nsw_graph_edges(embeddings, k_edges, n_centroids).localCheckpoint()
-    probes = query_vectors.select(
-        "probe_id",
-        F.col("qv").alias("pv"),
-        l2_norm("qv").alias("pnrm"),
-    ).localCheckpoint()
-    return _graph_beam_walk(
-        edges, probes, _entry_seed(embeddings, probes), k, ef, hops
+    entry-only, exactly as the NSW papers' query algorithm does.
+    Per-query cost is hops × ef × max-out-degree edge expansions —
+    independent of corpus size given the index, which is the serving
+    contract. A persisted index serves through
+    ``edges=graph_index_edges(spark, table, version)``; ``label``
+    filters at ranking — storage, pruning and filtering stack without
+    touching the walk."""
+    probes = query_vectors.select("probe_id", F.col("qv").alias("pv"))
+    return _graph_search(
+        embeddings, probes, k, ef, hops, edges, label, seed_self=False
     )
 
 
@@ -1704,80 +1637,60 @@ def persist_graph_index(
     )
 
 
-def ann_graph_search_vectors_table(
-    spark,
-    table,
-    embeddings: DataFrame,
-    query_vectors: DataFrame,
-    k: int = 5,
-    ef: int = 4,
-    hops: int = 4,
-    version: int | None = None,
-    label: int | None = None,
-) -> DataFrame:
-    """The serving walk of ``ann_graph_search_vectors`` reading the
-    index from its PERSISTED transactional table instead of a staged
-    in-session relation — build-once / probe-many across sessions.
-    ``label`` composes the FILTERED contract on top (predicate at
-    ranking, per-probe sound fallback via ``_filtered_visited_rank``)
-    — storage, pruning, and filtering stack without touching the walk.
-    Each hop fetches only the frontier's adjacency: the frontier ids
-    (bounded by |probes| x ef) drive ``pruned_dirs_eq`` point lookups,
-    so the scan touches only snapshot dirs whose min/max range AND
-    Bloom bitmap can hold a frontier node — at scale, O(frontier)
-    dirs out of an arbitrarily large index. Results are identical to
-    the staged-relation walk (same ``_graph_beam_walk``, same edge
-    rows; pinned by tests/test_similarity_serving.py)."""
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
+def graph_index_edges(
+    spark, table, version: int | None = None
+) -> Callable[[list[int]], DataFrame]:
+    """The PERSISTED index (``persist_graph_index``) as an ``edges``
+    reader for the graph searches: ``edges_for(frontier_ids)`` returns
+    only those nodes' adjacency rows. Each hop's frontier ids (bounded
+    by |probes| × ef) drive Bloom/min-max point-lookup pruning, so a hop
+    scans only the snapshot dirs that can hold a frontier node — at
+    scale, O(frontier) dirs out of an arbitrarily large index. The
+    version's manifest is pinned ONCE for the whole walk: manifests are
+    immutable per version, so every hop prunes against the held dict
+    with zero metadata I/O and reads the kept dirs with the manifest's
+    recorded schema (no per-hop listing or footer inference). Results
+    equal the staged-relation walk (same edge rows; pinned by
+    tests/test_similarity_serving.py)."""
     if version is None:
         version = table.current_version()
-    # Pin the version's manifest ONCE for the whole walk (round-9
-    # verdict item): manifests are immutable per version, so every
-    # hop's Bloom/min-max probe runs against the held dict with zero
-    # metadata I/O, and the kept dirs are read through ``_read_dirs``
-    # with the manifest's RECORDED schema - no per-hop parquet footer
-    # schema inference (the walk's fixed cost was hops x (listing +
-    # inference), not the probe arithmetic).
     manifest = table._manifest(version)
 
     def edges_for(ids):
-        kept, _ = table._eq_prune_many(
-            manifest, "vec_id", [int(v) for v in ids]
-        )
+        ids = [int(v) for v in ids]
+        kept, _ = table._eq_prune_many(manifest, "vec_id", ids)
         if not kept:
             return table.read(spark, version).limit(0)
         df = table._read_dirs(spark, manifest, kept)
-        return df.filter(F.col("vec_id").isin([int(v) for v in ids]))
+        return df.filter(F.col("vec_id").isin(ids))
 
-    probes = query_vectors.select(
-        "probe_id",
-        F.col("qv").alias("pv"),
-        l2_norm("qv").alias("pnrm"),
+    return edges_for
+
+
+def _graph_search(
+    embeddings: DataFrame,
+    probes: DataFrame,
+    k: int,
+    ef: int,
+    hops: int,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
+    label: int | None,
+    seed_self: bool,
+) -> DataFrame:
+    """The one graph-ANN query path: seed, walk, rank. ``probes`` =
+    (probe_id, pv). Seeds score every probe against the global min-id
+    entry point, plus the probe's own node (cos 1.0) for in-corpus
+    probes; the walk's visited set is then ranked plainly or, with
+    ``label``, under the predicate."""
+    probes = probes.select(
+        "probe_id", "pv", l2_norm("pv").alias("pnrm")
     ).localCheckpoint()
-    if label is None:
-        return _graph_beam_walk(
-            edges_for, probes, _entry_seed(embeddings, probes), k, ef, hops
-        )
-    visited = _graph_beam_visited(
-        edges_for, probes, _entry_seed(embeddings, probes), ef, hops
-    )
-    return _filtered_visited_rank(embeddings, probes, visited, label, k)
-
-
-def _entry_seed(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
-    """Seed rows scoring every probe against the global min-id entry
-    point — shared by the in-corpus and external-query walks so the two
-    can never diverge from the oracle's common seed fragment. ``probes``
-    = (probe_id, pv, pnrm)."""
-    from mapreduceindexer_spark.functions.vector import dot, l2_norm
-
     entry = (
         embeddings.select("vec_id", "embedding", l2_norm("embedding").alias("nrm"))
         .orderBy("vec_id")
         .limit(1)
     )
-    return probes.crossJoin(F.broadcast(entry)).select(
+    seeds = probes.crossJoin(F.broadcast(entry)).select(
         "probe_id",
         "vec_id",
         F.round(
@@ -1785,55 +1698,53 @@ def _entry_seed(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
         ).alias("cos_sim"),
         F.lit(False).alias("expanded"),
     )
-
-
-def _graph_beam_walk(
-    edges,
-    probes: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    ef: int,
-    hops: int,
-) -> DataFrame:
-    """Shared hop loop of the graph-ANN family: best-first beam search
-    over a prebuilt edge-with-payload relation from the given seed set.
-    ``probes`` = (probe_id, pv, pnrm) checkpointed; ``seeds`` =
-    (probe_id, vec_id, cos_sim, expanded). See ``ann_graph_search`` for
-    the algorithm and scale analysis.
-
-    ``edges`` is either the whole edge relation (DataFrame) or a
-    CALLABLE ``edges_for(frontier_ids) -> DataFrame`` — the serving
-    shape, where each hop fetches only the frontier nodes' adjacency
-    from a persisted index (Bloom/min-max-pruned point reads of the
-    transactional table). The callable path collects the frontier ids
-    first: bounded by |probes| x ef per hop (the beam width), a
-    metadata-plane fetch in the same class as the table tier's commit
-    scalars — never corpus-sized."""
+    if seed_self:
+        seeds = seeds.unionAll(
+            probes.select(
+                "probe_id",
+                F.col("probe_id").alias("vec_id"),
+                F.lit(1.0).alias("cos_sim"),
+                F.lit(False).alias("expanded"),
+            )
+        )
     visited = _graph_beam_visited(edges, probes, seeds, ef, hops)
-    w_beam = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return (
-        visited.filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("rn", F.row_number().over(w_beam).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id", "cos_sim", "rn")
+    if label is not None:
+        return _filtered_visited_rank(embeddings, probes, visited, label, k)
+    return _rank_per_probe(
+        visited.filter(F.col("vec_id") != F.col("probe_id")), k
+    ).select("probe_id", "vec_id", "cos_sim", "rn")
+
+
+def _rank_per_probe(scored: DataFrame, k: int) -> DataFrame:
+    """The rows of ``scored`` (probe_id, vec_id, cos_sim, ...) ranked
+    1..k per probe by (cos_sim DESC, vec_id ASC) — a total order, so
+    every per-probe top-k (batched IVF, graph walk, recall audits) is
+    engine-independent."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return scored.withColumn("rn", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rn") <= k
     )
 
 
 def _graph_beam_visited(
-    edges,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
     probes: DataFrame,
     seeds: DataFrame,
     ef: int,
     hops: int,
 ) -> DataFrame:
-    """The hop loop itself, returning the full VISITED relation
-    (probe_id, vec_id, cos_sim, expanded) after ``hops`` rounds —
-    factored out so filtered search can re-rank the visited set under
-    a predicate instead of taking the plain top-k."""
-    from mapreduceindexer_spark.functions.vector import dot
+    """The hop loop, returning the full VISITED relation (probe_id,
+    vec_id, cos_sim, expanded) after ``hops`` rounds. ``probes`` =
+    (probe_id, pv, pnrm) checkpointed; ``seeds`` = (probe_id, vec_id,
+    cos_sim, expanded).
 
+    ``edges`` is either the whole edge relation (DataFrame) or a
+    CALLABLE ``edges_for(frontier_ids) -> DataFrame`` — the serving
+    shape (``graph_index_edges``), where each hop fetches only the
+    frontier nodes' adjacency from a persisted index. The callable path
+    collects the frontier ids first: bounded by |probes| x ef per hop
+    (the beam width), a metadata-plane fetch in the same class as the
+    table tier's commit scalars — never corpus-sized."""
     visited = (
         seeds.groupBy("probe_id", "vec_id")
         .agg(
@@ -1904,97 +1815,6 @@ def _graph_beam_visited(
     return visited
 
 
-def ann_graph_search_filtered(
-    embeddings: DataFrame,
-    probe_ids: list[int],
-    label: int,
-    k: int = 5,
-    ef: int = 8,
-    hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """FILTERED graph-ANN: the standard filtered-HNSW strategy — the
-    WALK routes through non-matching nodes unfiltered (filtering the
-    routing graph fragments it and strands the beam; every production
-    graph index routes-then-filters), and the PREDICATE applies at the
-    final ranking. Per-probe soundness dial, same contract as
-    ``ivf_filtered_topk``: a probe whose visited ∩ predicate set holds
-    fewer than ``k`` nodes provably cannot fill its result from the
-    walk, so THAT probe (and only that probe) widens to an exact scan
-    of the filtered slice — the decision is a per-probe relational
-    count (no driver collect), and the output carries its evidence
-    (``n_cand``, ``fallback`` per probe, value-checked by the oracle's
-    per-probe gated union).
-
-    Scale: the walk is the ordinary bounded beam (|probes| × ef ×
-    out-degree per hop); the filter join touches only the visited set;
-    the fallback's exact scan is the filtered slice for the starved
-    probes only, never the corpus for every probe.
-    """
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
-    if edges is None:
-        edges = nsw_graph_edges(embeddings, k_edges, n_centroids).localCheckpoint()
-    probes = (
-        embeddings.filter(F.col("vec_id").isin(list(probe_ids)))
-        .select(
-            F.col("vec_id").alias("probe_id"),
-            F.col("embedding").alias("pv"),
-            l2_norm("embedding").alias("pnrm"),
-        )
-        .localCheckpoint()
-    )
-    seed_entry = _entry_seed(embeddings, probes)
-    seed_self = probes.select(
-        "probe_id",
-        F.col("probe_id").alias("vec_id"),
-        F.lit(1.0).alias("cos_sim"),
-        F.lit(False).alias("expanded"),
-    )
-    visited = _graph_beam_visited(
-        edges, probes, seed_entry.unionAll(seed_self), ef, hops
-    )
-    return _filtered_visited_rank(embeddings, probes, visited, label, k)
-
-
-def ann_graph_search_vectors_filtered(
-    embeddings: DataFrame,
-    query_vectors: DataFrame,
-    label: int,
-    k: int = 5,
-    ef: int = 8,
-    hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """FILTERED search on the SERVING path: external query vectors (not
-    corpus nodes) + a metadata predicate + the per-probe sound fallback
-    — the full production picture in one operator: "the k nearest
-    label-L documents to this fresh embedding". Entry-only seeding
-    (external queries have no self node, as in
-    ``ann_graph_search_vectors``); routing unfiltered; the predicate
-    and the starvation gate apply at ranking, per probe, relationally
-    (``_filtered_visited_rank``). ``edges`` accepts the same callable
-    form as the walk (persisted-index point reads), so this composes
-    with ``persist_graph_index`` unchanged."""
-    from mapreduceindexer_spark.functions.vector import l2_norm
-
-    if edges is None:
-        edges = nsw_graph_edges(embeddings, k_edges, n_centroids).localCheckpoint()
-    probes = query_vectors.select(
-        "probe_id",
-        F.col("qv").alias("pv"),
-        l2_norm("qv").alias("pnrm"),
-    ).localCheckpoint()
-    visited = _graph_beam_visited(
-        edges, probes, _entry_seed(embeddings, probes), ef, hops
-    )
-    return _filtered_visited_rank(embeddings, probes, visited, label, k)
-
-
 def _filtered_visited_rank(
     embeddings: DataFrame,
     probes: DataFrame,
@@ -2002,13 +1822,20 @@ def _filtered_visited_rank(
     label: int,
     k: int,
 ) -> DataFrame:
-    """Shared predicate-and-rank tail of the filtered graph searches:
-    restrict the visited set to the label, gate each probe on its own
-    candidate count (n_cand < k → that probe re-scores the exact
-    filtered slice), rank, and carry (n_cand, fallback) as
-    value-checked evidence. All relational — no driver collect."""
-    from mapreduceindexer_spark.functions.vector import cosine_similarity as _cos
-
+    """FILTERED ranking — the standard filtered-HNSW strategy: the WALK
+    routes through non-matching nodes unfiltered (filtering the routing
+    graph fragments it and strands the beam; every production graph
+    index routes-then-filters), and the PREDICATE applies here, at the
+    final ranking. Per-probe soundness dial, same contract as
+    ``ivf_filtered_topk``: a probe whose visited ∩ predicate set holds
+    fewer than ``k`` nodes provably cannot fill its result from the
+    walk, so THAT probe (and only that probe) widens to an exact scan
+    of the filtered slice. The decision is a per-probe relational count
+    (no driver collect), and the output carries its evidence
+    (``n_cand``, ``fallback`` per probe, value-checked by the oracle's
+    per-probe gated union). The filter join touches only the visited
+    set; the fallback scans the filtered slice for the starved probes
+    only, never the corpus for every probe."""
     lab = embeddings.select("vec_id", "label")
     matches = (
         visited.join(F.broadcast(lab.filter(F.col("label") == label)), "vec_id")
@@ -2037,89 +1864,60 @@ def _filtered_visited_rank(
         .select(
             "probe_id",
             "vec_id",
-            F.round(_cos("embedding", "pv"), 6).alias("cos_sim"),
+            F.round(cosine_similarity("embedding", "pv"), 6).alias("cos_sim"),
             "n_cand",
         )
     )
-    w_beam = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("vec_id")
-    )
-    return (
-        graph_side.unionByName(exact_side)
-        .withColumn("rn", F.row_number().over(w_beam).cast("bigint"))
-        .filter(F.col("rn") <= k)
-        .select(
-            "probe_id",
-            "vec_id",
-            "cos_sim",
-            "rn",
-            "n_cand",
-            (F.col("n_cand") < k).alias("fallback"),
-        )
+    return _rank_per_probe(graph_side.unionByName(exact_side), k).select(
+        "probe_id",
+        "vec_id",
+        "cos_sim",
+        "rn",
+        "n_cand",
+        (F.col("n_cand") < k).alias("fallback"),
     )
 
 
-def ann_graph_recall_vectors(
-    embeddings: DataFrame,
-    query_vectors: DataFrame,
-    k: int = 5,
-    ef: int = 4,
-    hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
-    floor_permille: int = 500,
-    edges: DataFrame | None = None,
-) -> DataFrame:
-    """Recall@k of the EXTERNAL-query serving path vs exact brute force
-    — the honesty instrument for the path users actually hit: ground
-    truth is the cosine top-k of each query vector over the whole
-    corpus (one broadcast of the bounded probe set, one corpus pass),
-    compared against the entry-seeded beam walk over the same index.
-    ``query_vectors`` = (probe_id, qv), probe_ids disjoint from corpus
-    vec_ids. Same contract projection as ``ann_graph_recall``
-    (``_recall_contract`` — one body, the two audits cannot drift)."""
-    # The query-vector relation feeds three plan branches (brute cross
-    # join, the walk's probes, the contract spine) and may itself be a
-    # join over the corpus — stage it once (multi-branch staging rule).
-    query_vectors = query_vectors.localCheckpoint()
-    probes = query_vectors.select("probe_id", F.col("qv").alias("pv"))
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    brute = (
+def _exact_topk(embeddings: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """(probe_id, vec_id): the EXACT cosine top-k of every probe over the
+    whole corpus — the ground truth of the recall audits. ``probes`` =
+    (probe_id, pv), bounded and broadcast; one corpus pass scoring
+    |probes| dots per row, with a per-probe top-k window (each partition
+    surrenders ≤ k rows per probe). The probe's own node never counts,
+    the same rule the walk's final ranking applies (external probe ids
+    are disjoint from corpus ids, so for them the filter drops
+    nothing)."""
+    scored = (
         embeddings.crossJoin(F.broadcast(probes))
+        .filter(F.col("vec_id") != F.col("probe_id"))
         .select(
             "probe_id",
             "vec_id",
             F.round(cosine_similarity("embedding", "pv"), 6).alias("cos_sim"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id")
     )
-    graph = ann_graph_search_vectors(
-        embeddings, query_vectors, k=k, ef=ef, hops=hops,
-        k_edges=k_edges, n_centroids=n_centroids, edges=edges,
-    ).select("probe_id", "vec_id")
-    return _recall_contract(
-        probes.select("probe_id"), brute, graph, k, floor_permille
-    )
+    return _rank_per_probe(scored, k).select("probe_id", "vec_id")
 
 
 def _recall_contract(
-    probe_spine: DataFrame,
-    brute: DataFrame,
-    graph: DataFrame,
+    embeddings: DataFrame,
+    probes: DataFrame,
+    approx: DataFrame,
     k: int,
     floor_permille: int,
 ) -> DataFrame:
-    """The shared (hits, recall, meets_floor) projection of the recall
-    audits — one body so the in-corpus and serving-path contracts can
-    never compute different arithmetic (review finding)."""
+    """The shared (probe_id, hits, recall, meets_floor) projection of
+    the recall audits: ``hits`` = |approx top-k ∩ exact top-k| per probe
+    of ``probes`` (probe_id, pv), ``recall`` = hits/k, ``meets_floor`` =
+    recall ≥ floor_permille/1000. One body, so the IVF, in-corpus and
+    serving-path audits can never compute different arithmetic."""
     hits = (
-        brute.join(graph, ["probe_id", "vec_id"])
+        _exact_topk(embeddings, probes, k)
+        .join(approx, ["probe_id", "vec_id"])
         .groupBy("probe_id")
         .agg(F.count("*").cast("bigint").alias("hits"))
     )
-    return probe_spine.join(hits, "probe_id", "left").select(
+    return probes.select("probe_id").join(hits, "probe_id", "left").select(
         "probe_id",
         F.coalesce(F.col("hits"), F.lit(0).cast("bigint")).alias("hits"),
         F.round(
@@ -2140,10 +1938,9 @@ def ann_graph_recall(
     k: int = 5,
     ef: int = 4,
     hops: int = 4,
-    k_edges: int = 3,
-    n_centroids: int = 8,
     floor_permille: int = 500,
-    edges: DataFrame | None = None,
+    *,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
 ) -> DataFrame:
     """Recall@k of graph-ANN beam search vs exact brute force, per probe,
     with an explicit CONTRACT column: ``meets_floor`` = recall ≥
@@ -2155,26 +1952,37 @@ def ann_graph_recall(
     probes = embeddings.filter(F.col("vec_id").isin(list(probe_ids))).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv")
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    brute = (
-        embeddings.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine_similarity("embedding", "pv"), 6).alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id")
-    )
     graph = ann_graph_search(
-        embeddings, probe_ids, k=k, ef=ef, hops=hops,
-        k_edges=k_edges, n_centroids=n_centroids, edges=edges,
+        embeddings, probe_ids, k, ef, hops, edges=edges
     ).select("probe_id", "vec_id")
-    return _recall_contract(
-        probes.select("probe_id"), brute, graph, k, floor_permille
-    )
+    return _recall_contract(embeddings, probes, graph, k, floor_permille)
+
+
+def ann_graph_recall_vectors(
+    embeddings: DataFrame,
+    query_vectors: DataFrame,
+    k: int = 5,
+    ef: int = 4,
+    hops: int = 4,
+    floor_permille: int = 500,
+    *,
+    edges: DataFrame | Callable[[list[int]], DataFrame],
+) -> DataFrame:
+    """Recall@k of the EXTERNAL-query serving path vs exact brute force
+    — the honesty instrument for the path users actually hit: ground
+    truth is the cosine top-k of each query vector over the whole
+    corpus, compared against the entry-seeded beam walk over the same
+    index. ``query_vectors`` = (probe_id, qv), probe_ids disjoint from
+    corpus vec_ids. Same contract projection as ``ann_graph_recall``."""
+    # The query-vector relation feeds three plan branches (brute cross
+    # join, the walk's probes, the contract spine) and may itself be a
+    # join over the corpus — stage it once (multi-branch staging rule).
+    query_vectors = query_vectors.localCheckpoint()
+    graph = ann_graph_search_vectors(
+        embeddings, query_vectors, k, ef, hops, edges=edges
+    ).select("probe_id", "vec_id")
+    probes = query_vectors.select("probe_id", F.col("qv").alias("pv"))
+    return _recall_contract(embeddings, probes, graph, k, floor_permille)
 
 
 def ann_recall(
@@ -2193,27 +2001,12 @@ def ann_recall(
     overlap — this is an *audit* query, not an estimate.
 
     Scale shape: the probe set is a bounded relation (broadcast); the
-    brute-force side is ONE corpus scan scoring |probes| dots per row
-    with a per-probe WindowGroupLimit top-k (each partition surrenders
-    ≤ k rows per probe); the IVF side reuses the cell assignment and
-    scores only same-cell candidates. Cost: linear scan + cell-bounded
-    candidates — never corpus × corpus.
+    exact side is one corpus pass (``_exact_topk``); the IVF side reuses
+    the cell assignment and scores only same-cell candidates. Cost:
+    linear scan + cell-bounded candidates — never corpus × corpus.
     """
     probes = embeddings.filter(F.col("vec_id").isin(list(probe_ids))).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv")
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    brute = (
-        embeddings.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(cosine_similarity("embedding", "pv"), 6).alias("cos_sim"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id")
     )
     cells = ivf_assignments(embeddings, n_centroids)
     probe_cells = (
@@ -2236,47 +2029,9 @@ def ann_recall(
             "vec_id",
             F.round(cosine_similarity("embedding", "pv"), 6).alias("cos_sim"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id")
     )
-    hits = (
-        brute.join(ivf, ["probe_id", "vec_id"])
-        .groupBy("probe_id")
-        .agg(F.count("*").cast("bigint").alias("hits"))
-    )
-    return (
-        probes.select("probe_id")
-        .join(hits, "probe_id", "left")
-        .select(
-            "probe_id",
-            F.coalesce(F.col("hits"), F.lit(0).cast("bigint")).alias("hits"),
-            F.round(
-                F.coalesce(F.col("hits"), F.lit(0)).cast("double") / F.lit(float(k)),
-                6,
-            ).alias("recall"),
-        )
-    )
-
-
-def _sub_d2(a: str, b: str, start: int, length: int) -> "F.Column":
-    """Squared L2 between ``length``-dim slices of two float vectors,
-    computed in double (exact float32→double widening) and rounded to 6
-    decimals — the same last-ulp-absorbing parity idiom as
-    ``_sq_l2_to_centroid``, replayed by the oracle with list_slice."""
-    return F.round(
-        F.aggregate(
-            F.zip_with(
-                F.slice(a, start, length),
-                F.slice(b, start, length),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    ivf = _rank_per_probe(ivf, k).select("probe_id", "vec_id")
+    return _recall_contract(embeddings, probes, ivf, k, 0).drop("meets_floor")
 
 
 def pq_subspace_distances(
@@ -2301,7 +2056,10 @@ def pq_subspace_distances(
             *[
                 F.struct(
                     F.lit(s).cast("bigint").alias("s"),
-                    _sub_d2("embedding", "cvec", s * sub + 1, sub).alias("d2s"),
+                    sq_l2(
+                        F.slice("embedding", s * sub + 1, sub),
+                        F.slice("cvec", s * sub + 1, sub),
+                    ).alias("d2s"),
                 )
                 for s in range(m)
             ]

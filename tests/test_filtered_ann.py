@@ -40,6 +40,11 @@ def emb(spark):
     return _embeddings(spark).localCheckpoint()
 
 
+@pytest.fixture(scope="module")
+def edges(emb):
+    return sim.nsw_graph_edges(emb, 3, 4).localCheckpoint()
+
+
 def test_exact_filtered_topk_respects_predicate_and_k(emb):
     out = sim.filtered_topk(emb, probe_id=0, label=2, k=5).collect()
     assert len(out) == 5
@@ -109,10 +114,9 @@ def test_filtered_predicate_pushes_to_parquet_scan(spark):
     assert "label" in pf, pf
 
 
-def test_graph_filtered_matches_predicate_and_per_probe_counts(emb):
-    out = sim.ann_graph_search_filtered(
-        emb, probe_ids=[0, 7], label=2, k=2, ef=8, hops=4,
-        k_edges=3, n_centroids=4,
+def test_graph_filtered_matches_predicate_and_per_probe_counts(emb, edges):
+    out = sim.ann_graph_search(
+        emb, probe_ids=[0, 7], k=2, ef=8, hops=4, edges=edges, label=2
     ).collect()
     label_of = {r.vec_id: r.label for r in emb.collect()}
     assert all(label_of[r.vec_id] == 2 for r in out)
@@ -126,13 +130,12 @@ def test_graph_filtered_matches_predicate_and_per_probe_counts(emb):
         assert len({(r.n_cand, r.fallback) for r in rows}) == 1
 
 
-def test_graph_filtered_starved_probe_falls_back_to_exact(emb):
+def test_graph_filtered_starved_probe_falls_back_to_exact(emb, edges):
     # k above anything a 4-hop walk's visited ∩ label can hold → every
     # probe widens, and the result equals the exact filtered top-k.
     k = 11  # |label=2| = 12, minus the probe where it matches
-    out = sim.ann_graph_search_filtered(
-        emb, probe_ids=[0], label=2, k=k, ef=2, hops=1,
-        k_edges=3, n_centroids=4,
+    out = sim.ann_graph_search(
+        emb, probe_ids=[0], k=k, ef=2, hops=1, edges=edges, label=2
     ).collect()
     assert out and all(r.fallback is True for r in out)
     exact = sim.filtered_topk(emb, probe_id=0, label=2, k=k).collect()
@@ -141,11 +144,10 @@ def test_graph_filtered_starved_probe_falls_back_to_exact(emb):
     ]
 
 
-def test_graph_filtered_mixed_probes_gate_independently(emb):
+def test_graph_filtered_mixed_probes_gate_independently(emb, edges):
     # A tiny walk starves some probes but not others; each decides alone.
-    out = sim.ann_graph_search_filtered(
-        emb, probe_ids=[0, 7, 13], label=2, k=3, ef=2, hops=2,
-        k_edges=3, n_centroids=4,
+    out = sim.ann_graph_search(
+        emb, probe_ids=[0, 7, 13], k=3, ef=2, hops=2, edges=edges, label=2
     ).collect()
     flags = {}
     for r in out:
@@ -156,13 +158,13 @@ def test_graph_filtered_mixed_probes_gate_independently(emb):
         assert fb == (n_cand < 3)
 
 
-def test_external_filtered_serving_matches_predicate_and_gates(spark, emb):
+def test_external_filtered_serving_matches_predicate_and_gates(spark, emb, edges):
     qv = spark.createDataFrame(
         [(9000, [0.5, -0.2, 0.8, 0.1]), (9001, [-0.9, 0.4, 0.0, 0.3])],
         "probe_id: bigint, qv: array<float>",
     )
-    out = sim.ann_graph_search_vectors_filtered(
-        emb, qv, label=2, k=3, ef=4, hops=3, k_edges=3, n_centroids=4
+    out = sim.ann_graph_search_vectors(
+        emb, qv, k=3, ef=4, hops=3, edges=edges, label=2
     ).collect()
     label_of = {r.vec_id: r.label for r in emb.collect()}
     assert all(label_of[r.vec_id] == 2 for r in out)

@@ -1,6 +1,8 @@
 """Static import guard: every ``from mapreduceindexer_spark.<mod> import
 <name>`` in the package, the scripts, the benchmarks and the tests must
-name something that exists.
+name something that exists — and so must every attribute read through a
+module alias (``from mapreduceindexer_spark.operators import similarity
+as sim`` then ``sim.<name>``).
 
 Most scripts never run in CI, and many imports sit inside function
 bodies, so deleting or renaming a public name can leave a broken import
@@ -50,15 +52,92 @@ def _package_imports() -> dict[tuple[str, str], list[str]]:
     return found
 
 
-def _exists(module: str, name: str) -> bool:
-    if hasattr(importlib.import_module(module), name):
-        return True
-    # ``from pkg import submodule`` names a module, not an attribute.
+def _is_module(name: str) -> bool:
     try:
-        importlib.import_module(f"{module}.{name}")
+        importlib.import_module(name)
     except ModuleNotFoundError:
         return False
     return True
+
+
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+
+
+def _scope_nodes(scope: ast.AST):
+    """The nodes of one scope, not descending into nested scopes (whose
+    defining nodes are still yielded)."""
+    stack = list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, _SCOPES):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _alias_reads(scope, inherited, where, found) -> None:
+    """Record ``alias.attr`` loads in ``scope`` whose ``alias`` is bound
+    to a package module, here or in an enclosing scope, and is not
+    rebound locally (a local assignment or argument of the same name
+    shadows it for the whole scope)."""
+    nodes = list(_scope_nodes(scope))
+    shadowed = {
+        n.id
+        for n in nodes
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load)
+    }
+    if isinstance(scope, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+        a = scope.args
+        shadowed |= {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+        shadowed |= {x.arg for x in (a.vararg, a.kwarg) if x is not None}
+    aliases = {k: v for k, v in inherited.items() if k not in shadowed}
+    for node in nodes:
+        if (
+            isinstance(node, ast.ImportFrom)
+            and node.level == 0
+            and node.module
+            and node.module.startswith(PACKAGE)
+        ):
+            for alias in node.names:
+                full = f"{node.module}.{alias.name}"
+                if alias.name != "*" and _is_module(full):
+                    aliases[alias.asname or alias.name] = full
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.asname and alias.name.startswith(PACKAGE + "."):
+                    aliases[alias.asname] = alias.name
+    for node in nodes:
+        if isinstance(node, _SCOPES):
+            _alias_reads(node, aliases, where, found)
+        elif (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.ctx, ast.Load)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in aliases
+        ):
+            key = (aliases[node.value.id], node.attr)
+            found.setdefault(key, []).append(f"{where}:{node.lineno}")
+
+
+def _module_alias_loads() -> dict[tuple[str, str], list[str]]:
+    """(module, attribute) → the source locations that read
+    ``alias.attribute`` where ``alias`` is bound to a package module by
+    ``from mapreduceindexer_spark.<pkg> import <module> [as alias]`` or
+    ``import mapreduceindexer_spark.<module> as alias``. Assignments
+    (``alias.attr = ...``, e.g. a test patching a private helper) are
+    not reads and are skipped."""
+    found: dict[tuple[str, str], list[str]] = {}
+    for path in _python_files():
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        _alias_reads(tree, {}, os.path.relpath(path, ROOT), found)
+    return found
+
+
+def _exists(module: str, name: str) -> bool:
+    # ``from pkg import submodule`` names a module, not an attribute.
+    return hasattr(importlib.import_module(module), name) or _is_module(
+        f"{module}.{name}"
+    )
 
 
 def test_every_imported_package_name_exists():
@@ -73,4 +152,18 @@ def test_every_imported_package_name_exists():
     ]
     assert not missing, "\n".join(missing)
     # Importing the package must not have started Spark.
+    assert had_context or SparkContext._active_spark_context is None
+
+
+def test_every_module_alias_attribute_exists():
+    had_context = SparkContext._active_spark_context is not None
+    loads = _module_alias_loads()
+    # A scoping slip would make the check vacuous.
+    assert len(loads) > 100, len(loads)
+    missing = [
+        f"{module}.{name} (read at {', '.join(where)})"
+        for (module, name), where in sorted(loads.items())
+        if not hasattr(importlib.import_module(module), name)
+    ]
+    assert not missing, "\n".join(missing)
     assert had_context or SparkContext._active_spark_context is None

@@ -297,14 +297,18 @@ def test_ann_graph_recall_is_perfect_on_clustered_data(spark):
     driver fixture's near-random vectors the same walk floors at 0.2
     (q_ann_graph_recall's contract); this pins that the gap is the
     data, not the algorithm."""
-    from mapreduceindexer_spark.operators.similarity import ann_graph_recall
+    from mapreduceindexer_spark.operators.similarity import (
+        ann_graph_recall,
+        nsw_graph_edges,
+    )
 
     emb = _clustered_embeddings(spark)
+    edges = nsw_graph_edges(emb, 3, 8).localCheckpoint()
     # Panel mixes the global entry (0), mid-cluster members, and the
     # highest ids of several clusters.
     rec = ann_graph_recall(
-        emb, [0, 17, 42, 101, 155], k=5, ef=8, hops=4,
-        k_edges=3, n_centroids=8, floor_permille=200,
+        emb, [0, 17, 42, 101, 155], k=5, ef=8, hops=4, floor_permille=200,
+        edges=edges,
     ).collect()
     assert len(rec) == 5
     for r in rec:
@@ -415,8 +419,7 @@ def test_hnsw_recall_is_perfect_on_clustered_data(spark):
     emb = _clustered_embeddings(spark)
     edges = hnsw_graph_edges(emb, k_edges=3, n_centroids=8, n_coarse=3)
     rec = ann_graph_recall(
-        emb, [0, 17, 42, 101, 155], k=5, ef=8, hops=5,
-        k_edges=3, n_centroids=8, floor_permille=200,
+        emb, [0, 17, 42, 101, 155], k=5, ef=8, hops=5, floor_permille=200,
         edges=edges.localCheckpoint(),
     ).collect()
     assert len(rec) == 5

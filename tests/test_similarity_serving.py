@@ -18,8 +18,8 @@ from mapreduceindexer_spark.operators import similarity as sim
 from mapreduceindexer_spark.sources.transact import TransactionalTable
 
 
-def _embeddings(spark, n=48, dim=4):
-    """Small deterministic vector corpus (no test-data dependency)."""
+def _embeddings(spark, n=48, dim=4, n_labels=5):
+    """Small deterministic labeled vector corpus (no test-data dependency)."""
     rows = [
         (
             i,
@@ -27,10 +27,13 @@ def _embeddings(spark, n=48, dim=4):
                 math.sin(0.7 * i + j) + 0.01 * ((i * 31 + j * 7) % 13)
                 for j in range(dim)
             ],
+            i % n_labels,
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(rows, "vec_id: bigint, embedding: array<float>")
+    return spark.createDataFrame(
+        rows, "vec_id: bigint, embedding: array<float>, label: int"
+    )
 
 
 def _queries(spark):
@@ -55,19 +58,21 @@ def served(spark, tmp_path_factory):
 def test_table_served_equals_staged_relation(spark, served):
     emb, edges, table, version = served
     qv = _queries(spark)
-    want = sorted(
-        tuple(r)
-        for r in sim.ann_graph_search_vectors(
-            emb, qv, k=5, ef=4, hops=5, edges=edges
-        ).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in sim.ann_graph_search_vectors_table(
-            spark, table, emb, qv, k=5, ef=4, hops=5, version=version
-        ).collect()
-    )
-    assert got == want and len(got) > 0
+    reader = sim.graph_index_edges(spark, table, version)
+    for label in (None, 2):  # plain ranking, then filtered ranking
+        want = sorted(
+            tuple(r)
+            for r in sim.ann_graph_search_vectors(
+                emb, qv, k=5, ef=4, hops=5, edges=edges, label=label
+            ).collect()
+        )
+        got = sorted(
+            tuple(r)
+            for r in sim.ann_graph_search_vectors(
+                emb, qv, k=5, ef=4, hops=5, edges=reader, label=label
+            ).collect()
+        )
+        assert got == want and len(got) > 0, label
 
 
 def test_persisted_index_is_clustered_and_prunable(spark, served):
@@ -107,8 +112,9 @@ def test_probe_many_across_new_reader(spark, served):
     )
     got = sorted(
         tuple(r)
-        for r in sim.ann_graph_search_vectors_table(
-            spark, reader, emb, qv, k=3, ef=4, hops=4
+        for r in sim.ann_graph_search_vectors(
+            emb, qv, k=3, ef=4, hops=4,
+            edges=sim.graph_index_edges(spark, reader),
         ).collect()
     )
     assert got == want
@@ -136,8 +142,9 @@ def test_pinned_walk_unaffected_by_concurrent_maintenance(spark, tmp_path):
     qv = _queries(spark)
     want = sorted(
         tuple(r)
-        for r in sim.ann_graph_search_vectors_table(
-            spark, table, emb, qv, k=5, ef=4, hops=5, version=v0
+        for r in sim.ann_graph_search_vectors(
+            emb, qv, k=5, ef=4, hops=5,
+            edges=sim.graph_index_edges(spark, table, v0),
         ).collect()
     )
     assert want
@@ -168,8 +175,9 @@ def test_pinned_walk_unaffected_by_concurrent_maintenance(spark, tmp_path):
             assert pin == v0
             got = sorted(
                 tuple(r)
-                for r in sim.ann_graph_search_vectors_table(
-                    spark, table, emb, qv, k=5, ef=4, hops=5, version=pin
+                for r in sim.ann_graph_search_vectors(
+                    emb, qv, k=5, ef=4, hops=5,
+                    edges=sim.graph_index_edges(spark, table, pin),
                 ).collect()
             )
             assert got == want

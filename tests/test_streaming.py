@@ -319,8 +319,8 @@ def test_streaming_hnsw_index_equals_cold_build_and_serves(spark, tmp_path):
     )
     got = sorted(
         tuple(r)
-        for r in sim.ann_graph_search_vectors_table(
-            spark, table, emb, qv, k=4, ef=4, hops=5
+        for r in sim.ann_graph_search_vectors(
+            emb, qv, k=4, ef=4, hops=5, edges=sim.graph_index_edges(spark, table)
         ).collect()
     )
     assert got == want and len(got) > 0
